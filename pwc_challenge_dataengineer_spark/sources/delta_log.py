@@ -48,6 +48,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .commit import write_atomic
 from .versioned_store import VersionedTable
 
 _LOG = "_delta_log"
@@ -59,6 +60,15 @@ def _snapshot_files(root: str, version: int) -> list[str]:
         os.path.join(f"v={version}", f)
         for f in os.listdir(vdir)
         if f.endswith(".parquet")
+    )
+
+
+def _write_commit(log_dir: str, version: int, actions: list[dict]) -> None:
+    """Publish ``<version>.json`` — the commit's visibility point: replay
+    lists only whole ``<digits>.json`` files."""
+    write_atomic(
+        os.path.join(log_dir, f"{version:020d}.json"),
+        "\n".join(json.dumps(a) for a in actions) + "\n",
     )
 
 
@@ -176,8 +186,10 @@ def _write_checkpoint(
     pq.write_table(
         tbl, os.path.join(log_dir, f"{version:020d}.checkpoint.parquet")
     )
-    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
-        json.dump({"version": version, "size": n}, fh)
+    write_atomic(
+        os.path.join(log_dir, "_last_checkpoint"),
+        json.dumps({"version": version, "size": n}),
+    )
 
 
 def export_delta_log(
@@ -272,8 +284,7 @@ def export_delta_log(
             }
             actions.append({"add": add})
             live_adds.append(add)
-        with open(os.path.join(log_dir, f"{i:020d}.json"), "w") as fh:
-            fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
+        _write_commit(log_dir, i, actions)
         if i > 0 and i % checkpoint_interval == 0:
             assert cur_meta is not None
             _write_checkpoint(
@@ -788,8 +799,7 @@ def write_delta_table(
         )
     log_dir = os.path.join(path, _LOG)
     os.makedirs(log_dir, exist_ok=True)
-    with open(os.path.join(log_dir, f"{0:020d}.json"), "w") as fh:
-        fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
+    _write_commit(log_dir, 0, actions)
     return log_dir
 
 
@@ -921,8 +931,7 @@ def delete_rows_with_dv(
         prior_card = (old.get("deletionVector") or {}).get("cardinality", 0)
         deleted_count += desc["cardinality"] - prior_card
     log_dir = os.path.join(path, _LOG)
-    with open(os.path.join(log_dir, f"{next_v:020d}.json"), "w") as fh:
-        fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
+    _write_commit(log_dir, next_v, actions)
     return deleted_count
 
 

@@ -42,6 +42,8 @@ from __future__ import annotations
 import json
 import os
 
+from .commit import write_atomic
+
 
 # --------------------------------------------- metadata files index
 # Lite rendering of Hudi's METADATA TABLE `files` partition (the
@@ -136,10 +138,7 @@ def _write_files_index(
         for n in names:
             if n not in slot["logs"]:
                 slot["logs"].append(n)
-    tmp = _index_path(location, instant) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(merged, fh)
-    os.replace(tmp, _index_path(location, instant))
+    write_atomic(_index_path(location, instant), json.dumps(merged))
 
 
 def _index_from_stats(stats: dict[str, list[dict]]):
@@ -187,10 +186,7 @@ def _prune_files_index(location: str, removed: set[str]) -> None:
             for n in slot["logs"]
             if os.path.join(location, part, n) not in removed
         ]
-    tmp = newest + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(idx, fh)
-    os.replace(tmp, newest)
+    write_atomic(newest, json.dumps(idx))
 
 
 def _col_stats_path(location: str, instant: str) -> str:
@@ -266,10 +262,7 @@ def _write_col_stats(
                     os.path.basename(e["path"])
                 ] = b
     os.makedirs(mdir, exist_ok=True)
-    tmp = _col_stats_path(location, instant) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(merged, fh)
-    os.replace(tmp, _col_stats_path(location, instant))
+    write_atomic(_col_stats_path(location, instant), json.dumps(merged))
 
 
 def _prune_col_stats(location: str, removed: set[str]) -> None:
@@ -295,10 +288,7 @@ def _prune_col_stats(location: str, removed: set[str]) -> None:
             if os.path.join(location, part, n) in removed
         ]:
             del files[name]
-    tmp = newest + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(stats, fh)
-    os.replace(tmp, newest)
+    write_atomic(newest, json.dumps(stats))
 
 
 def _timeline(location: str) -> list[str]:
@@ -478,8 +468,10 @@ def commit(
     stats = _write_base_slices(location, instant, writes)
     _write_files_index(location, instant, *_index_from_stats(stats))
     _write_col_stats(location, instant, stats, stats_columns)
-    with open(os.path.join(hd, f"{instant}.commit"), "w") as fh:
-        json.dump({"partitionToWriteStats": stats}, fh)
+    write_atomic(
+        os.path.join(hd, f"{instant}.commit"),
+        json.dumps({"partitionToWriteStats": stats}),
+    )
     os.remove(inflight)
 
 
@@ -728,8 +720,10 @@ def commit_mor(
             {"fileId": file_id, "logDir": ldir}
         )
     _write_files_index(location, instant, *_index_from_stats(stats))
-    with open(os.path.join(hd, f"{instant}.deltacommit"), "w") as fh:
-        json.dump({"partitionToWriteStats": stats}, fh)
+    write_atomic(
+        os.path.join(hd, f"{instant}.deltacommit"),
+        json.dumps({"partitionToWriteStats": stats}),
+    )
     os.remove(inflight)
 
 
@@ -996,10 +990,10 @@ def compact_logs(spark, location: str, key_col: str, instant: str):
     )
     stats = _write_tagged_slices(location, instant, tagged, todo)
     _write_files_index(location, instant, *_index_from_stats(stats))
-    with open(os.path.join(hd, f"{instant}.commit"), "w") as fh:
-        json.dump(
-            {"partitionToWriteStats": stats, "operation": "compact"}, fh
-        )
+    write_atomic(
+        os.path.join(hd, f"{instant}.commit"),
+        json.dumps({"partitionToWriteStats": stats, "operation": "compact"}),
+    )
     os.remove(inflight)
     return len(todo), n_logs
 
@@ -1067,15 +1061,16 @@ def rollback(location: str, target: str, instant: str):
     for p in (_index_path(location, target), _col_stats_path(location, target)):
         if os.path.exists(p):
             os.remove(p)
-    with open(os.path.join(hd, f"{instant}.rollback"), "w") as fh:
-        json.dump(
+    write_atomic(
+        os.path.join(hd, f"{instant}.rollback"),
+        json.dumps(
             {
                 "rolledBack": target,
                 "removedFiles": n_files,
                 "removedLogDirs": n_logdirs,
-            },
-            fh,
-        )
+            }
+        ),
+    )
     return n_files, n_logdirs
 
 
@@ -1150,15 +1145,16 @@ def clean_slices(location: str, instant: str, keep_last: int = 1):
     _prune_files_index(location, removed)
     _prune_col_stats(location, removed)
     hd = os.path.join(location, ".hoodie")
-    with open(os.path.join(hd, f"{instant}.clean"), "w") as fh:
-        json.dump(
+    write_atomic(
+        os.path.join(hd, f"{instant}.clean"),
+        json.dumps(
             {
                 "earliestRetained": retained[0],
                 "removedFiles": n_files,
                 "removedLogDirs": n_logdirs,
-            },
-            fh,
-        )
+            }
+        ),
+    )
     return n_files, n_logdirs
 
 
@@ -1249,15 +1245,16 @@ def cluster_cow(
         partition: [fid for fid, _p in parts[partition]]
         for partition in part_order
     }
-    with open(os.path.join(hd, f"{instant}.replacecommit"), "w") as fh:
-        json.dump(
+    write_atomic(
+        os.path.join(hd, f"{instant}.replacecommit"),
+        json.dumps(
             {
                 "partitionToWriteStats": stats,
                 "replacedFileIds": replaced,
                 "operation": "cluster",
                 "clusteringSortColumn": sort_col,
-            },
-            fh,
-        )
+            }
+        ),
+    )
     os.remove(inflight)
     return len(names), sum(len(v) for v in replaced.values())

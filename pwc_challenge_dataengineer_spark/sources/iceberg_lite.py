@@ -55,6 +55,7 @@ from .avrolite import (
     _read_long,
     _write_long,
 )
+from .commit import write_atomic
 
 # ------------------------------------------------------- generic OCF io
 
@@ -89,10 +90,7 @@ def write_ocf(path: str, schema: dict, rows: list[tuple]) -> None:
     _write_long(out, len(data))
     out.extend(data)
     out.extend(sync)
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as fh:
-        fh.write(out)
-    os.replace(tmp, path)
+    write_atomic(path, bytes(out))
 
 
 def read_ocf(path: str) -> list[tuple]:
@@ -198,6 +196,16 @@ def _next_version(location: str) -> int:
         return 1
     name = os.path.basename(p)
     return int(name[1 : -len(".metadata.json")]) + 1
+
+
+def _commit_metadata(location: str, md: dict) -> None:
+    """Publish ``md`` as the next ``v<N>.metadata.json`` — the commit's
+    visibility point: readers resolve the newest such file, so manifests
+    and data written before it stay invisible until it lands."""
+    path = os.path.join(
+        location, "metadata", f"v{_next_version(location)}.metadata.json"
+    )
+    write_atomic(path, json.dumps(md))
 
 
 def _load_metadata(location: str) -> dict | None:
@@ -491,11 +499,7 @@ def commit_snapshot(
         for path, _part, _cnt in added:
             fs[path] = md["current-schema-id"]
         new_md["file-schemas"] = fs
-    version = _next_version(location)
-    tmp = os.path.join(mdir, f"v{version}.metadata.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(new_md, fh)
-    os.replace(tmp, os.path.join(mdir, f"v{version}.metadata.json"))
+    _commit_metadata(location, new_md)
     return sid
 
 
@@ -677,11 +681,7 @@ def rewrite_manifests(location: str) -> tuple[int, int]:
     new_md = dict(md)
     new_md["snapshots"] = md["snapshots"] + [snap_entry]
     new_md["current-snapshot-id"] = sid
-    version = _next_version(location)
-    tmp = os.path.join(mdir, f"v{version}.metadata.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(new_md, fh)
-    os.replace(tmp, os.path.join(mdir, f"v{version}.metadata.json"))
+    _commit_metadata(location, new_md)
     return n_before, len(rows)
 
 
@@ -938,11 +938,7 @@ def commit_snapshot_v2(
         "last-sequence-number": sid,
         "snapshots": snapshots,
     }
-    version = _next_version(location)
-    tmp = os.path.join(mdir, f"v{version}.metadata.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(new_md, fh)
-    os.replace(tmp, os.path.join(mdir, f"v{version}.metadata.json"))
+    _commit_metadata(location, new_md)
     return sid
 
 
@@ -1097,13 +1093,8 @@ def set_schema(location: str, fields: list[dict]) -> int:
     )
     md["schemas"] = schemas
     md["current-schema-id"] = new_id
-    mdir = os.path.join(location, "metadata")
-    os.makedirs(mdir, exist_ok=True)
-    version = _next_version(location)
-    tmp = os.path.join(mdir, f"v{version}.metadata.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(md, fh)
-    os.replace(tmp, os.path.join(mdir, f"v{version}.metadata.json"))
+    os.makedirs(os.path.join(location, "metadata"), exist_ok=True)
+    _commit_metadata(location, md)
     return new_id
 
 
@@ -1338,10 +1329,5 @@ def expire_snapshots(location: str, keep_last: int = 1):
         new_md["file-schemas"] = {
             p: s for p, s in md["file-schemas"].items() if p in reachable
         }
-    mdir = os.path.join(location, "metadata")
-    version = _next_version(location)
-    tmp = os.path.join(mdir, f"v{version}.metadata.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(new_md, fh)
-    os.replace(tmp, os.path.join(mdir, f"v{version}.metadata.json"))
+    _commit_metadata(location, new_md)
     return len(expired), removed

@@ -65,6 +65,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from .commit import write_atomic
+
 _EPOCH_2024_MS = 1704067200000
 
 SCHEMA = (
@@ -102,11 +104,9 @@ class KafkaLikeBroker:
         for p in range(partitions):
             d = self._pdir(topic, p)
             os.makedirs(d, exist_ok=True)
-            for name, val in (("logstart", "0"), ("next", "0")):
-                f = os.path.join(d, name)
-                if not os.path.exists(f):
-                    with open(f, "w") as fh:
-                        fh.write(val)
+            for name in ("logstart", "next"):
+                if not os.path.exists(os.path.join(d, name)):
+                    self._write_int(d, name, 0)
 
     def partitions_of(self, topic: str) -> list[int]:
         tdir = os.path.join(self.root, topic)
@@ -151,7 +151,9 @@ class KafkaLikeBroker:
         return off
 
     def truncate(self, topic: str, partition: int, new_start: int) -> None:
-        """Retention: delete records with offset < ``new_start``."""
+        """Retention: delete records with offset < ``new_start``. The log
+        is swapped whole, so a crash mid-rewrite keeps the old log and a
+        replay converges."""
         d = self._pdir(topic, partition)
         log = os.path.join(d, "log.jsonl")
         kept = []
@@ -162,8 +164,7 @@ class KafkaLikeBroker:
                     for line in fh
                     if json.loads(line)["o"] >= new_start
                 ]
-        with open(log, "w") as fh:
-            fh.writelines(kept)
+        write_atomic(log, "".join(kept))
         self._write_int(d, "logstart", new_start)
 
     # -- offset queries
@@ -186,10 +187,7 @@ class KafkaLikeBroker:
 
     @staticmethod
     def _write_int(d: str, name: str, v: int) -> None:
-        tmp = os.path.join(d, f".{name}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(str(v))
-        os.replace(tmp, os.path.join(d, name))
+        write_atomic(os.path.join(d, name), str(v))
 
 
 # ------------------------------------------------- option / offset helpers

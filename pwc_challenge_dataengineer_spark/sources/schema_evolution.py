@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .commit import write_atomic
+
 # Reference widening map (schema_evolution_manager.py:207-214), keyed by
 # Spark simpleString type names.
 TYPE_WIDENING: dict[str, frozenset[str]] = {
@@ -180,10 +182,7 @@ class SchemaRegistry:
         entries.append(
             {"version": len(entries) + 1, "schema": schema.json(), "mode": mode}
         )
-        tmp = self._subject_path(subject) + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(entries, fh)
-        os.replace(tmp, self._subject_path(subject))
+        write_atomic(self._subject_path(subject), json.dumps(entries))
         return entries[-1]["version"]
 
     def latest_version(self, subject: str) -> int | None:

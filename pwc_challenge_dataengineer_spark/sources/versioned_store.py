@@ -34,6 +34,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .commit import write_atomic
+
 _MANIFEST = "_manifest.json"
 
 
@@ -55,15 +57,12 @@ class VersionedTable:
             return []
 
     def _write_manifest(self, entries: list[dict]) -> None:
-        # Atomic commit: write to a temp file then os.replace() so a crash
-        # mid-write never leaves a torn manifest. Single-writer assumption:
-        # unlike Delta's optimistic concurrency, two concurrent committers
-        # can still lose an entry (last replace wins) — this store emulates
-        # Delta's table semantics, not its commit protocol.
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(entries, fh)
-        os.replace(tmp, self._manifest_path())
+        # The manifest swap is the commit (see commit.write_atomic): a
+        # version is visible only once its entry lands. Single-writer
+        # assumption: unlike Delta's optimistic concurrency, two concurrent
+        # committers can still lose an entry (last replace wins) — this
+        # store emulates Delta's table semantics, not its commit protocol.
+        write_atomic(self._manifest_path(), json.dumps(entries))
 
     def _append_manifest(self, entry: dict) -> None:
         entries = self._load_manifest()
@@ -75,9 +74,19 @@ class VersionedTable:
         entries = self._load_manifest()
         return entries[-1]["version"] if entries else None
 
+    def _fresh_version_dir(self, version: int) -> str:
+        """``v=N`` for the next commit, emptied first: N is one past the
+        newest manifest entry, so an existing dir can only be the orphan
+        of a commit that crashed before its manifest append — replaying
+        that commit must overwrite it, not fail on it."""
+        vdir = os.path.join(self.path, f"v={version}")
+        shutil.rmtree(vdir, ignore_errors=True)
+        return vdir
+
     def write(self, df: DataFrame, operation: str = "write") -> int:
-        version = (self.latest_version() if self.latest_version() is not None else -1) + 1
-        target = os.path.join(self.path, f"v={version}")
+        prev = self.latest_version()
+        version = (prev if prev is not None else -1) + 1
+        target = self._fresh_version_dir(version)
         df.write.mode("errorifexists").parquet(target)
         self._append_manifest(
             {"version": version, "ts": time.time(), "operation": operation}
@@ -110,7 +119,7 @@ class VersionedTable:
         prev = self.latest_version()
         prev_entry = self._resolve(prev) if prev is not None else None
         version = (prev if prev is not None else -1) + 1
-        vdir = os.path.join(self.path, f"v={version}")
+        vdir = self._fresh_version_dir(version)
         base.write.mode("errorifexists").parquet(os.path.join(vdir, "base"))
         if prev_entry is not None and "appends" in prev_entry:
             appends = list(prev_entry["appends"])
@@ -294,17 +303,14 @@ class VersionedTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        # Materialize BEFORE the snapshot write: `out` lazily reads the
-        # current snapshot, and writing a new version must not race the read.
-        merged = out.localCheckpoint(eager=True)
-        return self.write(merged, operation="merge")
+        return self.write(out, operation="merge")
 
     def delete_where(self, condition) -> int:
         """Delta DELETE: new snapshot without matching rows. Rows where the
         condition evaluates NULL are kept (SQL DELETE removes only
         condition=true rows; a bare ~cond would drop the NULLs too)."""
         kept = self.read().filter(~F.coalesce(condition, F.lit(False)))
-        return self.write(kept.localCheckpoint(eager=True), operation="delete")
+        return self.write(kept, operation="delete")
 
     # -- optimize (compaction + Z-ORDER) -----------------------------------
     def optimize(
@@ -350,17 +356,18 @@ class VersionedTable:
                 else:
                     spark.conf.set(key, prev)
         else:
-            clustered = df.coalesce(n_files).localCheckpoint(eager=True)
+            clustered = df.coalesce(n_files)
         return self.write(clustered, operation="optimize")
 
     # -- retention ---------------------------------------------------------
     def vacuum(self, keep_last: int = 1) -> list[int]:
         """Drop all but the newest ``keep_last`` snapshots (Delta VACUUM).
         Time travel to a vacuumed version then errors, matching Delta.
-        Split commits reference OLDER versions' append segments; a version
-        dir still referenced by any kept entry survives on disk even when
-        its own manifest entry is dropped (Delta keeps data files alive
-        the same way — retention applies to unreferenced files only)."""
+        Split commits reference OLDER versions' append segments; a dropped
+        version whose ``append`` segment a kept entry still references
+        keeps only that segment on disk — its ``base`` goes (Delta keeps
+        data files alive the same way — retention applies to unreferenced
+        files only)."""
         entries = self._load_manifest()
         if len(entries) <= keep_last:
             return []
@@ -371,12 +378,12 @@ class VersionedTable:
             referenced.update(e.get("appends", []))
         dropped = []
         for e in drop:
+            vdir = os.path.join(self.path, f"v={e['version']}")
             if e["version"] in referenced:
-                continue  # data still carried by a kept split commit
-            shutil.rmtree(
-                os.path.join(self.path, f"v={e['version']}"),
-                ignore_errors=True,
-            )
+                # append still carried by a kept split commit
+                shutil.rmtree(os.path.join(vdir, "base"), ignore_errors=True)
+                continue
+            shutil.rmtree(vdir, ignore_errors=True)
             dropped.append(e["version"])
         self._write_manifest(keep)
         return dropped
@@ -471,4 +478,4 @@ def scd2_merge(
         .unionByName(closed)
         .unionByName(inserts)
     )
-    return table.write(out.localCheckpoint(eager=True), operation="scd2_merge")
+    return table.write(out, operation="scd2_merge")

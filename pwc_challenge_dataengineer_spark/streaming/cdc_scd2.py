@@ -84,11 +84,11 @@ def cdc_scd2_apply(
     payload's primary-key fields, which are non-null by definition;
     enforce upstream if a source can emit null keys.
 
-    ``include_history=False`` returns ONLY the rows this batch produced
-    or touched (the new/updated current rows and the versions it closed)
-    WITHOUT unioning the pass-through closed history — the delta a
-    split-commit store persists so untouched history files carry over by
-    reference instead of being rewritten every batch.
+    ``include_history=False`` returns the FULL current slice (new,
+    updated AND untouched current rows) plus the versions this batch
+    closed; it omits only the pass-through closed history — what a
+    split-commit store persists, so untouched history files carry over
+    by reference instead of being rewritten every batch.
     """
     from functools import reduce
 
@@ -221,10 +221,11 @@ def make_cdc_scd2_batch_fn(
     """foreachBatch function: Debezium-envelope micro-batch (a ``value``
     string column) -> parse -> one-pass SCD2 apply -> versioned commit.
 
-    The commit is one ``table.write`` of the checkpointed result — the
-    read-modify-write is safe under foreachBatch's serial driver
+    The commit is one ``table.write_split`` of the checkpointed result —
+    the read-modify-write is safe under foreachBatch's serial driver
     execution (single writer), and a replayed batch converges to the
-    identical state (see module docstring)."""
+    identical state (see module docstring), also after a crash inside
+    the commit: the manifest append is its visibility point."""
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):

@@ -81,6 +81,7 @@ from ..functions.dedup_fuzzy import (
     minhash_doc_profiles,
     profiles_to_signatures,
 )
+from ..sources.commit import write_atomic
 
 N_BANDS = 4
 _RESOLVE_ROUNDS = 2
@@ -104,7 +105,7 @@ class DedupSegmentStore:
     batch, so replay idempotency is a single check. Reads union the active
     segments (bounded by ``compact_every``); ``compact`` folds them into one.
     Crash-safety: data dirs are written overwrite-mode BEFORE the manifest
-    swap (os.replace — atomic), so a torn commit is invisible and replayable;
+    swap (commit.write_atomic), so a torn commit is invisible and replayable;
     compaction removes superseded dirs only after the swap, so orphan dirs
     are dead weight, never read.
     """
@@ -181,10 +182,7 @@ class DedupSegmentStore:
 
     def _swap(self, state: dict) -> None:
         state["hash_scheme"] = VERIFY_HASH_SCHEME
-        tmp = self._manifest + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, self._manifest)
+        write_atomic(self._manifest, json.dumps(state))
 
     def has_segment(self, seg_id: str) -> bool:
         # `applied` survives compaction; `segments` is only the LIVE data

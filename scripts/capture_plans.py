@@ -1,7 +1,8 @@
-"""Capture .explain("formatted") for headline queries into plans/r14/.
+"""Capture .explain("formatted") for headline queries into plans/<round>/.
 
-Usage: python scripts/capture_plans_r13.py <suffix> [query ...]
-  suffix: "before" or "after" — file name becomes plans/r14/<query>_<suffix>.txt
+Usage: python scripts/capture_plans.py <round> <suffix> [query ...]
+  round: plan directory name, e.g. "r14"
+  suffix: "before" or "after" — file name becomes plans/<round>/<query>_<suffix>.txt
   With no query list, captures every bench.py HEADLINE query.
 """
 
@@ -10,21 +11,25 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import HEADLINE, _sf_dir  # noqa: E402
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or HEADLINE
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    round_dir = sys.argv[1]
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or HEADLINE
     sf_dir, _ = _sf_dir()
 
     from pwc_challenge_dataengineer_spark.plans.catalog import QUERIES
     from pwc_challenge_dataengineer_spark.session import get_spark
 
     spark = get_spark("capture-plans")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14")
+    out_dir = os.path.join(REPO, "plans", round_dir)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = QUERIES[name](spark, sf_dir)

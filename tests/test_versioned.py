@@ -55,6 +55,23 @@ def test_delete_and_vacuum(spark, tmp_path):
     except ValueError:
         pass
 
+    # split commits: a dropped version whose append segment a kept entry
+    # still carries keeps only that segment — its base is reclaimed
+    s = VersionedTable(spark, str(tmp_path / "split"))
+
+    def mk(rows):
+        return spark.createDataFrame(rows, ["id", "v"])
+
+    s.write_split(mk([(1, "a")]), mk([(9, "h0")]))
+    s.write_split(mk([(1, "b")]), mk([(8, "h1")]))
+    s.write_split(mk([(1, "c")]), None)
+    kept = {v: _rows(s.read(version_as_of=v), "id", "v") for v in (1, 2)}
+    assert s.vacuum(keep_last=2) == []  # v=0's append is still referenced
+    assert not (tmp_path / "split" / "v=0" / "base").exists()
+    assert (tmp_path / "split" / "v=0" / "append").is_dir()
+    for v, rows in kept.items():
+        assert _rows(s.read(version_as_of=v), "id", "v") == rows
+
 
 def test_scd2_merge_close_and_insert(spark, tmp_path):
     t = VersionedTable(spark, str(tmp_path / "scd2"))
