@@ -84,10 +84,25 @@ def ingest_bronze(
     output_path: str | None = None,
     clock: str | None = None,
 ) -> DataFrame:
+    """Raw CSV(s) → bronze. Given ``output_path``, writes the partitioned
+    parquet and returns that committed parquet, not the lineage that built
+    it: silver and gold then scan these files once instead of re-reading
+    the CSV per job, and with ``clock=None`` every later layer sees the
+    ``ingestion_timestamp`` that was written rather than a fresh
+    ``current_timestamp()`` per query. Without ``output_path`` the result
+    stays lazy."""
     raw = read_csv(spark, input_paths, schema=RAW_SALES_SCHEMA)
     bronze = add_quality_flags(
         add_bronze_metadata(ensure_required_columns(normalize_columns(raw)), clock)
     )
     if output_path:
         write_parquet(bronze, output_path, partition_by=["ingestion_date"])
+        return read_committed(spark, bronze, output_path)
     return bronze
+
+
+def read_committed(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+    """``df`` as committed at ``path``: a parquet scan with ``df``'s dtypes
+    and column order, so the next layer reads these files instead of
+    re-running ``df``'s lineage (and re-evaluating its clock)."""
+    return spark.read.schema(df.schema).parquet(path).select(df.columns)

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ..functions.quality import completeness_score, outlier_3sigma
 from ..operators.dedup import dedup_keep_latest
 from ..sources.writers import write_parquet
+from .bronze import read_committed
 
 NULL_TOKENS = ("", "nan", "none", "null", "n/a")
 
@@ -91,6 +92,11 @@ def process_silver(
     bronze: DataFrame,
     output_path: str | None = None,
 ) -> DataFrame:
+    """Bronze → silver. Given ``output_path``, writes the partitioned
+    parquet and returns that committed parquet, so the five gold tables
+    and the quality report each scan it instead of re-running the dedup
+    window and the 3σ stats join over bronze. Without ``output_path`` the
+    result stays lazy."""
     silver = add_derived_columns(business_rule_filter(cast_and_normalize(bronze)))
     silver = dedup_keep_latest(
         silver,
@@ -106,4 +112,5 @@ def process_silver(
     silver = outlier_3sigma(silver, "total_amount")
     if output_path:
         write_parquet(silver, output_path, partition_by=["invoice_year"])
+        return read_committed(spark, silver, output_path)
     return silver

@@ -9,6 +9,8 @@ Morton interleave must be bit-exact, or the clustering silently degrades.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -234,6 +236,24 @@ def _ensure_bucketed_gold(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     return t_orders, t_lineitem
 
 
+# One sorted-scan child session per SparkContext, reused by every call: a
+# fresh newSession() per call would leave one SessionState behind each time.
+_SORTED_SCAN_SESSIONS: dict = {}
+_SORTED_SCAN_LOCK = threading.Lock()
+
+
+def _sorted_scan_session(spark: SparkSession) -> SparkSession:
+    with _SORTED_SCAN_LOCK:
+        child = _SORTED_SCAN_SESSIONS.get(spark.sparkContext)
+        if child is None:
+            child = spark.newSession()
+            child.conf.set(
+                "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
+            )
+            _SORTED_SCAN_SESSIONS[spark.sparkContext] = child
+        return child
+
+
 @register(
     "bucketed_gold_order_profile",
     oracle="""
@@ -280,10 +300,7 @@ def bucketed_gold_order_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to CHECK one-file-per-bucket; Spark falls back to sorting when a
     # bucket has several files, so this is a planning-cost trade, not a
     # correctness trade (guide §6).
-    bspark = spark.newSession()
-    bspark.conf.set(
-        "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
-    )
+    bspark = _sorted_scan_session(spark)
     o = bspark.table(t_orders).select("o_orderkey", "o_orderstatus")
     li = bspark.table(t_lineitem)
     j = li.hint("merge").join(o, li.l_orderkey == o.o_orderkey)

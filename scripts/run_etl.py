@@ -42,7 +42,7 @@ def main() -> None:
         json.dumps(
             {
                 "bronze_rows": bronze.count(),
-                "silver_rows": silver.count(),
+                "silver_rows": report["total_rows"],
                 "gold_tables": sorted(gold),
                 "quality": report,
             }

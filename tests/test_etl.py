@@ -3,10 +3,13 @@
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
 from pwc_challenge_dataengineer_spark.etl import build_gold_tables, ingest_bronze, process_silver
+from pwc_challenge_dataengineer_spark.etl import gold_etl
 from pwc_challenge_dataengineer_spark.etl.silver import quality_report
 
 RAW_CSV = """InvoiceNo,StockCode,Description,Quantity,InvoiceDate,UnitPrice,CustomerID,Country
@@ -95,6 +98,76 @@ def test_partitioned_outputs(spark, medallion):
     assert "invoice_year" in silver_back.columns  # partition column round-trips
     gold_back = spark.read.parquet(str(root / "gold" / "sales_summary"))
     assert gold_back.filter(F.col("country") == "France").count() == 1
+
+
+def _reads_only_parquet(df) -> bool:
+    files = df.inputFiles()
+    return bool(files) and all(f.endswith(".parquet") for f in files)
+
+
+def test_layers_read_committed_parquet(medallion):
+    """Plan-shape guard: a layer given an output path hands the next layer
+    its committed parquet, never the lineage back to the raw CSV."""
+    _, bronze, silver, gold = medallion
+    assert _reads_only_parquet(bronze)
+    assert _reads_only_parquet(silver)
+    for name, df in gold.items():
+        assert _reads_only_parquet(df), name
+
+
+def test_ingestion_timestamp_agrees_across_layers_without_clock(spark, tmp_path):
+    """With clock=None the bronze parquet, the silver parquet and a later
+    read of the returned silver all carry the one ingestion time bronze
+    wrote, not a fresh current_timestamp() per query."""
+    csv_path = tmp_path / "raw.csv"
+    csv_path.write_text(RAW_CSV)
+    bronze = ingest_bronze(spark, str(csv_path), output_path=str(tmp_path / "bronze"))
+    silver = process_silver(spark, bronze, output_path=str(tmp_path / "silver"))
+
+    def stamps(df):
+        return {
+            (r.ingestion_timestamp, r.ingestion_date)
+            for r in df.select("ingestion_timestamp", "ingestion_date").distinct().collect()
+        }
+
+    written_bronze = stamps(spark.read.parquet(str(tmp_path / "bronze")))
+    written_silver = stamps(spark.read.parquet(str(tmp_path / "silver")))
+    assert len(written_bronze) == 1
+    assert written_silver == written_bronze
+    assert stamps(silver) == written_bronze
+
+
+def test_gold_writes_carry_the_callers_job_group(spark, medallion, tmp_path):
+    _, _, silver, _ = medallion
+    sc = spark.sparkContext
+    sc.setJobGroup("etl-gold-test", "concurrent gold writes")
+    try:
+        build_gold_tables(spark, silver, output_dir=str(tmp_path / "gold"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store is fed by the asynchronous listener bus
+    deadline = time.monotonic() + 10
+    while True:
+        jobs = sc.statusTracker().getJobIdsForGroup("etl-gold-test")
+        if len(jobs) >= 5 or time.monotonic() > deadline:
+            break
+        time.sleep(0.1)
+    assert len(jobs) >= 5, jobs
+
+
+def test_gold_write_failure_is_raised(spark, medallion, tmp_path, monkeypatch):
+    _, _, silver, _ = medallion
+    real = gold_etl.write_parquet
+
+    def failing(df, path, **kw):
+        if path.endswith("/customer_metrics"):
+            raise RuntimeError("disk full: customer_metrics")
+        real(df, path, **kw)
+
+    monkeypatch.setattr(gold_etl, "write_parquet", failing)
+    with pytest.raises(RuntimeError, match="customer_metrics"):
+        build_gold_tables(spark, silver, output_dir=str(tmp_path / "gold"))
 
 
 def test_orc_roundtrip_matches_parquet(spark, sf_dir, tmp_path):

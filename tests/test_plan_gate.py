@@ -93,6 +93,19 @@ def test_bucketed_gold_conf_does_not_leak(spark, sf_dir):
     assert st.exchanges == 0 and st.smj == 1, st
 
 
+def test_bucketed_gold_reuses_one_child_session(spark, sf_dir):
+    """Repeated calls plan on one memoized child session instead of
+    leaving a new session behind per call; the caller's session never
+    gets the sorted-scan conf."""
+    key = "spark.sql.legacy.bucketedTableScan.outputOrdering"
+    a = QUERIES["bucketed_gold_order_profile"](spark, sf_dir)
+    b = QUERIES["bucketed_gold_order_profile"](spark, sf_dir)
+    assert a.sparkSession is b.sparkSession
+    assert a.sparkSession is not spark
+    assert a.sparkSession.conf.get(key) == "true"
+    assert spark.conf.get(key, None) is None
+
+
 def test_recursive_plan_is_unionloop_with_hash_joins(spark, sf_dir):
     """The recursion family must plan as UnionLoop with per-iteration
     hash joins — a CartesianProduct or nested-loop fallback inside the
